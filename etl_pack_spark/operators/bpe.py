@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_pack_spark.operators.cache import pooled_persist
+from etl_pack_spark.operators.guards import bounded_count
 from etl_pack_spark.operators.tokenize import TOKEN_SPLIT_RE, tokens
 
 # Word-boundary marker appended to each word's final symbol (the
@@ -68,8 +69,7 @@ def train_bpe(
     # pooled: the probe and the collect below otherwise run the
     # corpus-sized aggregate twice
     wc = pooled_persist(word_counts(df, text_col))
-    probe = wc.limit(max_vocab + 1).count()
-    if probe > max_vocab:
+    if bounded_count(wc, max_vocab) > max_vocab:
         raise ValueError(
             f"corpus has more than {max_vocab} distinct words; raise "
             f"max_vocab or pre-filter (the word-count table must be "

@@ -76,20 +76,11 @@ def truncated_persist(df: DataFrame) -> DataFrame:
       * Trade at scale: checkpointed partitions are NOT recomputable
         on executor loss (they replay from the stored blocks only) —
         the same documented trade as the components-loop
-        localCheckpoint. ``spark.etl_pack.lineage.truncate=false``
-        (conf) or ``ETL_PACK_LINEAGE_TRUNCATE=false`` (env) falls back
-        to :func:`pooled_persist` for recompute-preferring clusters.
+        localCheckpoint; a caller that prefers recompute uses
+        :func:`pooled_persist` instead.
       * Never use on a frame carrying an ``Observation`` — the
         CollectMetrics node disappears into the RDD and the metrics
         listener never fires (bm25's observed postings keep
         pooled_persist for exactly this reason).
     """
-    import os
-
-    flag = df.sparkSession.conf.get(
-        "spark.etl_pack.lineage.truncate",
-        os.environ.get("ETL_PACK_LINEAGE_TRUNCATE", "true"),
-    )
-    if str(flag).lower() in ("false", "0", "off"):
-        return pooled_persist(df)
     return df.localCheckpoint(eager=False)

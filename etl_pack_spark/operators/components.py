@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pack_spark.operators import guards
+
 # Above this many edges the driver union-find gives way to the
 # distributed loop. The collect is Arrow-batched (toPandas): 2M long
 # edges land as two numpy int64 columns ≈ 32 MB; the union-find's
@@ -124,12 +126,11 @@ def connected_components(
         # otherwise re-execute that pipeline once more for the labeling
         edges = edges.persist()
         released = False
-        # bounded size probe: limit(n+1) is one cheap job, no full
-        # count. (r15 note: a merged limit(n+1).toPandas() was tried
-        # and REVERTED — CollectLimit executes incrementally, 1 then
-        # 4× then 16× partitions, so the "one action" ran as up to 8
+        # (r15 note: a merged limit(n+1).toPandas() was tried and
+        # REVERTED — CollectLimit executes incrementally, 1 then 4×
+        # then 16× partitions, so the "one action" ran as up to 8
         # jobs; the probe + full collect pair is 2.)
-        probe = edges.select(src).limit(MAX_DRIVER_PAIRS + 1).count()
+        probe = guards.bounded_count(edges.select(src), MAX_DRIVER_PAIRS)
         if probe <= MAX_DRIVER_PAIRS:
             try:
                 return _driver_union_find(edges, src, dst)
@@ -293,8 +294,8 @@ def cluster_dedup(
     Join strategy (r8): the clusters frame is NOT assumed small — on
     the web-crawl corpora this engine targets, 30-50% of documents
     near-dup something, so clusters/members/losers are corpus-fraction
-    scale. ONE bounded ``limit(n+1).count()`` probe (the
-    :mod:`~.guards` posture) decides the strategy for every join here:
+    scale. ONE :func:`~.guards.bounded_count` probe decides the
+    strategy for every join here:
     members, best, winners, and losers are all row-bounded by the
     clusters frame (one row per clustered doc, or one per cluster), so
     proving clusters small proves them all broadcastable; past the
@@ -307,21 +308,13 @@ def cluster_dedup(
     already labeled the graph — the components computation is the one
     iterative stage and must not silently run twice.
     """
-    from etl_pack_spark.operators import guards
-
     if clusters is None:
         # connected_components returns its labels frame persisted (the
         # distributed loop) or driver-local (the union-find path), so
         # the size probe below never re-runs the iterative stage
         clusters = neardup_clusters(pairs, id_col)
     bound = guards.MAX_BROADCAST_MODEL_ROWS
-    # zero-job fast path (r16): the union-find path returns a driver-
-    # local labeling whose exact rowCount is already in the plan stats
-    # — no probe job; the distributed-loop path still probes
-    n = guards.known_row_count(clusters)
-    if n is None:
-        n = clusters.limit(bound + 1).count()
-    small = n <= bound
+    small = guards.bounded_count(clusters, bound) <= bound
 
     def hint(frame: DataFrame) -> DataFrame:
         return F.broadcast(frame) if small else frame

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pack_spark.operators.guards import bounded_count
 from etl_pack_spark.operators.tokenize import shingle_rows, shingles_sql, tokens_sql
 
 
@@ -369,7 +370,7 @@ def register_eval_set(
         if reg is not None:
             mine = reg.where(F.col("eval_set") == eval_set)
             if legacy:
-                if mine.limit(1).count():
+                if bounded_count(mine, 0):
                     existing_n = default_n
             else:
                 row = mine.select("n").limit(1).collect()

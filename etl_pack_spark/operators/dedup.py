@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pack_spark.operators.guards import plan_stats
 from etl_pack_spark.operators.hashing import row_hash
 
 HASH_COL = "__row_h"
@@ -89,20 +90,22 @@ def _membership_prefilter(keyed: DataFrame, snap: DataFrame):
         .drop(_BUCKET_COL).drop(HASH_COL)
 
 
-def _estimated_rows(df: DataFrame) -> int:
-    """Catalyst's size-only row estimate for ``df``: plan
-    ``sizeInBytes`` divided by the output schema's estimated row width
-    — the same defaultSize arithmetic the byte estimate itself was
-    propagated with, so the division recovers the row count the
-    optimizer carried. Free driver-side plan stats, no job. The
-    size-only visitor ignores filter selectivity and aggregate
-    reduction, so this OVERestimates the distinct snapshot — which
-    only ever engages the (result-identical) pre-filter a bit early or
-    falls back to the plain join a bit early, both safe."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    size = int(str(stats.sizeInBytes()))
-    width = 8 + int(df._jdf.schema().defaultSize())
-    return size // width
+def _estimated_rows(df: DataFrame) -> int | None:
+    """Catalyst's size-only row estimate for ``df`` (``None`` when the
+    plan stats cannot be read): plan ``sizeInBytes`` divided by the
+    output schema's estimated row width — the same defaultSize
+    arithmetic the byte estimate itself was propagated with. Free
+    driver-side plan stats, no job. It can miss in BOTH directions:
+    the size-only visitor ignores filter selectivity and aggregate
+    reduction (overestimates), but a file scan's ``sizeInBytes`` counts
+    COMPRESSED bytes (underestimates) — the traced cron reconcile's
+    300k-row snapshot reads as ~49k, so the prefilter never engages
+    there. Either miss only engages the (result-identical) pre-filter
+    or falls back to the plain join on the wrong side of the window."""
+    stats = plan_stats(df)
+    if stats is None:
+        return None
+    return stats.bytes // (8 + int(df._jdf.schema().defaultSize()))
 
 
 def incremental_filter(
@@ -146,9 +149,8 @@ def incremental_filter(
     if prefilter == "on":
         return _membership_prefilter(keyed, snap)
     if prefilter == "auto":
-        try:
-            est = _estimated_rows(snap)
-        except Exception:  # noqa: BLE001 — stats unavailable: exact probe
+        est = _estimated_rows(snap)
+        if est is None:  # stats unavailable: exact count
             from etl_pack_spark.operators.cache import pooled_persist
 
             snap = pooled_persist(snap)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pack_spark.operators.cache import pooled_persist as _pooled_persist
+from etl_pack_spark.operators.guards import bounded_count
 
 _log = logging.getLogger(__name__)
 
@@ -164,7 +165,7 @@ def _drop_hot_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
 
     Adaptive since r7: the overfull-key frame is materialized once
     (pooled persist — tiny by construction: heavy hitters are few)
-    and probed with a bounded ``limit(1).count()``. When NO bucket is
+    and probed with a :func:`~.guards.bounded_count`. When NO bucket is
     overfull — every healthy corpus — the anti-join never enters the
     plan, so the default-on cap costs one combinable count over the
     bucketed rows (whose upstream signature frame the callers persist)
@@ -182,7 +183,7 @@ def _drop_hot_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
     recomputing the cheap banding expressions from the cached
     signatures."""
     over = _pooled_persist(overfull_buckets(rows, keys, cap).drop("count"))
-    if over.limit(1).count() == 0:
+    if bounded_count(over, 0) == 0:
         return rows
     _log.warning(
         "heavy-hitter cap engaged: %d bucket key(s) on %s exceed %d "
@@ -578,8 +579,7 @@ def ngram_jaccard_pairs(
     20+ min at the 5000-doc bench scale; the rewrite's measured wall
     is seconds). The brute-force plan is kept for ``threshold <= 0``,
     where a zero-intersection pair is a legitimate result."""
-    # limit(max+1) bounds the check to one cheap job, no full count
-    if len(df.select(id_col).limit(max_docs + 1).take(max_docs + 1)) > max_docs:
+    if bounded_count(df.select(id_col), max_docs) > max_docs:
         raise ValueError(
             f"ngram_jaccard_pairs is an O(n^2) all-pairs baseline capped at "
             f"{max_docs} docs; use minhash_lsh_dedup_pairs for corpora this size"

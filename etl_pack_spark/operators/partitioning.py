@@ -20,10 +20,11 @@ is the right trade at any scale.)
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_pack_spark.operators.guards import plan_stats
 
 # Bytes of (column-pruned, plan-estimated) input per spread partition
 # (r16, round-15 VERDICT #4): the r15 spread always widened to
@@ -33,41 +34,25 @@ from pyspark.sql import functions as F
 # now scales with the data: ceil(est_bytes / floor), capped at
 # defaultParallelism, so a 50 KB frame spreads a few ways, the sf0.1
 # fixtures still reach full width, and the 10x/30x probes are
-# unchanged. The floor is a LOCAL default calibrated on the fixture
-# sweep recorded in OPTIMIZATION_r16.md; production tunes it via
-# spark.etl_pack.spread.floorBytes (conf) or
-# ETL_PACK_SPREAD_FLOOR_BYTES (env) — it is a bytes-per-task knob like
-# spark.sql.files.maxPartitionBytes, not a core-count constant.
+# unchanged. The floor is calibrated on the fixture sweep recorded in
+# OPTIMIZATION_r16.md — a bytes-per-task constant like
+# spark.sql.files.maxPartitionBytes, not a core-count one.
 SPREAD_FLOOR_BYTES = 24 * 1024
 
 
-def _spread_floor_bytes(df: DataFrame) -> int:
-    conf = df.sparkSession.conf.get(
-        "spark.etl_pack.spread.floorBytes",
-        os.environ.get("ETL_PACK_SPREAD_FLOOR_BYTES", ""),
-    )
-    return int(conf) if conf else SPREAD_FLOOR_BYTES
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the (column-pruned) input — free
-    driver-side plan stats, no job. Unknown/huge estimates (opaque
-    lineage) saturate the width at defaultParallelism, which is the
-    pre-r16 behavior."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    return int(str(stats.sizeInBytes()))
-
-
-def spread_width(df: DataFrame) -> int:
+def spread_width(df: DataFrame) -> int | None:
     """The data-proportionate spread width (r16):
-    ``min(defaultParallelism, ceil(est_bytes / floor))``, never below
-    1. Raises whatever the underlying plan-stats access raises —
-    callers fall back to their conservative behavior."""
+    ``min(defaultParallelism, ceil(est_bytes / SPREAD_FLOOR_BYTES))``,
+    never below 1, from the (column-pruned) plan's byte estimate.
+    Unknown/huge estimates (opaque lineage) saturate the width at
+    defaultParallelism, the pre-r16 behavior. ``None`` when the plan
+    stats cannot be read — callers fall back to their conservative
+    behavior."""
+    stats = plan_stats(df)
+    if stats is None:
+        return None
     target = df.sparkSession.sparkContext.defaultParallelism
-    return min(
-        target,
-        max(1, math.ceil(_estimated_bytes(df) / _spread_floor_bytes(df))),
-    )
+    return min(target, max(1, math.ceil(stats.bytes / SPREAD_FLOOR_BYTES)))
 
 
 def spread_small_scan(
@@ -75,8 +60,8 @@ def spread_small_scan(
 ) -> DataFrame:
     """Repartition by ``key_col`` only when the scan underuses the
     cluster (planned partitions < the data-proportionate width below).
-    Falls back to repartitioning if the partition count cannot be
-    planned.
+    Falls back to a plain keyed repartition if the partition count or
+    the plan stats cannot be read.
 
     The spread pins an EXPLICIT partition count (r15): a keyed
     ``repartition(col)`` without one is an AQE-coalescible exchange,
@@ -98,11 +83,13 @@ def spread_small_scan(
     under-provisioned by any bytes-per-task sizing."""
     try:
         n_parts = df.rdd.getNumPartitions()
-        if full_width:
-            width = df.sparkSession.sparkContext.defaultParallelism
-        else:
-            width = spread_width(df)
     except Exception:  # noqa: BLE001 — conservative: keep fixture behavior
+        return df.repartition(F.col(key_col))
+    width = (
+        df.sparkSession.sparkContext.defaultParallelism
+        if full_width else spread_width(df)
+    )
+    if width is None:
         return df.repartition(F.col(key_col))
     if n_parts < width:
         return df.repartition(width, F.col(key_col))

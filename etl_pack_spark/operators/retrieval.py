@@ -327,8 +327,8 @@ def bm25_topk_batch(
     Scale: postings are semi-joined down to the union of all query
     terms BEFORE any scoring join. Join strategy is the one-bounded-
     probe pattern (cluster_dedup's r8 posture): the persisted
-    query-term frame gets ONE ``limit(n+1).count()`` probe, and its
-    verdict hints every join here — ``used`` (distinct terms) and the
+    query-term frame gets ONE :func:`~.guards.bounded_count` probe, and
+    its verdict hints every join here — ``used`` (distinct terms) and the
     restricted idf ``stats`` are row-bounded by ``q_terms`` by
     construction, so proving it small proves them all, with no
     separate probe re-executing the postings aggregation. Past the
@@ -382,7 +382,7 @@ def _bm25_score_batch(
 
     q_terms = pooled_persist(q_terms)
     bound = guards.MAX_BROADCAST_MODEL_ROWS
-    small = q_terms.limit(bound + 1).count() <= bound
+    small = guards.bounded_count(q_terms, bound) <= bound
 
     def hint(frame: DataFrame) -> DataFrame:
         return F.broadcast(frame) if small else frame

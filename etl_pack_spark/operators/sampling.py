@@ -362,7 +362,7 @@ def grouped_split_assign(
     """
     from etl_pack_spark.operators.cache import pooled_persist
     from etl_pack_spark.operators.components import neardup_clusters
-    from etl_pack_spark.operators.guards import maybe_broadcast
+    from etl_pack_spark.operators.guards import maybe_broadcast, plan_stats
 
     if clusters is None:
         if pairs is None:
@@ -372,9 +372,8 @@ def grouped_split_assign(
         # — and skipping the persist keeps its LocalRelation plan, so
         # maybe_broadcast below reads the exact rowCount from plan
         # stats instead of running a probe job (r16)
-        from etl_pack_spark.operators.guards import known_row_count
-
-        if known_row_count(clusters) is None:
+        stats = plan_stats(clusters)
+        if stats is None or stats.rows is None:
             clusters = pooled_persist(clusters)
     clusters = clusters.withColumnRenamed(id_col, "__gid")
     joined = df.join(

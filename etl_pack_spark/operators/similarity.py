@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_pack_spark.operators.guards import bounded_count
+
 HEX = "0123456789abcdef"
 
 
@@ -941,7 +943,7 @@ def lsh_neardup_pairs(
         banded.groupBy("tbl", "bucket").count()
         .where(F.col("count") > LSH_BUCKET_TILE_ROWS)
     )
-    if over.limit(1).count() == 0:
+    if bounded_count(over, 0) == 0:
         return (
             banded.groupBy("tbl", "bucket")
             .applyInPandas(bucket_pairs, schema=schema)
@@ -1250,7 +1252,7 @@ def ann_topk(
     ============  ========  =======================  ====================
 
     ``auto`` picks ``brute`` ≤ 100k vectors, ``ivf_flat`` ≤ 2M, else
-    ``ivf_pq`` (probe by bounded ``limit(n+1)`` counts, one cheap job).
+    ``ivf_pq`` (one :func:`~.guards.bounded_count` probe).
 
     ``index_path`` (ivf_pq arm only — ignored by the raw-vector
     methods, which have no trained state to amortize): load the
@@ -1277,7 +1279,7 @@ def ann_topk(
     if method not in methods:
         raise ValueError(f"method must be one of {methods}, got {method!r}")
     if method == "auto":
-        probe = df.select(id_col).limit(2_000_001).count()
+        probe = bounded_count(df.select(id_col), 2_000_000)
         method = (
             "brute" if probe <= 100_000
             else "ivf_flat" if probe <= 2_000_000

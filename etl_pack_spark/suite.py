@@ -65,6 +65,7 @@ from etl_pack_spark.operators.dedup import (
     incremental_filter,
     snapshot_hashes,
 )
+from etl_pack_spark.operators.guards import bounded_count
 from etl_pack_spark.operators.hashing import row_hash, row_hash_sql, with_row_hash
 from etl_pack_spark.operators.partitioning import spread_small_scan
 from etl_pack_spark.plans.curate import curate_corpus_sql, curate_disposition_sql
@@ -1468,12 +1469,12 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge frame — two extra eager actions over the same checkpointed
     # pairs. |batch1| and the fold's merged list (label edges + batch2
     # ≤ 2x total pairs) are both bounded by the TOTAL pair count, so
-    # one limit probe at MAX/2 proves the driver path for both; larger
+    # one bounded probe at MAX/2 proves the driver path for both; larger
     # graphs keep the per-run auto probes (method="auto" unchanged).
     from etl_pack_spark.operators.components import MAX_DRIVER_PAIRS
 
     bound = MAX_DRIVER_PAIRS // 2
-    small = pairs.limit(bound + 1).count() <= bound
+    small = bounded_count(pairs, bound) <= bound
     method = "driver" if small else "auto"
     # the incremental posture: label batch 1, then FOLD batch 2 into
     # the existing labeling — exact (min-id labels are canonical), so

@@ -265,19 +265,19 @@ def test_unigram_guard_fallback_matches_broadcast_path(spark):
     # job); anything non-leaf (even a projection over range, without
     # CBO) and every distributed plan must return None so the bounded
     # probe still runs
-    from etl_pack_spark.operators.guards import known_row_count
+    from etl_pack_spark.operators.guards import plan_stats
 
-    assert known_row_count(spark.range(10)) == 10
-    assert known_row_count(model) is None  # Project over Range
+    assert plan_stats(spark.range(10)).rows == 10
+    assert plan_stats(model).rows is None  # Project over Range
     # the Arrow/pandas createDataFrame path — what the components
     # union-find emits — plans as a LocalRelation (a tuple-list
     # createDataFrame goes through an RDD and correctly returns None)
     import pandas as pd
 
     local = spark.createDataFrame(pd.DataFrame({"id": [1, 2, 3]}))
-    assert known_row_count(local) == 3
-    assert known_row_count(local.where("id < 3")) == 2  # folded local
-    assert known_row_count(df.groupBy("doc_id").count()) is None
+    assert plan_stats(local).rows == 3
+    assert plan_stats(local.where("id < 3")).rows == 2  # folded local
+    assert plan_stats(df.groupBy("doc_id").count()).rows is None
     # and the fallback join still computes the same answer
     import etl_pack_spark.operators.guards as guards
 
@@ -289,6 +289,52 @@ def test_unigram_guard_fallback_matches_broadcast_path(spark):
     finally:
         guards.MAX_BROADCAST_MODEL_ROWS = orig
     assert got == want
+
+
+def _jobs_launched(spark, fn):
+    """``(fn(), number of Spark jobs fn launched)``, counted through a
+    job group once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bounded_count_jobs_and_plan_stats_failure(spark, tmp_path, monkeypatch):
+    """bounded_count runs no job when the plan stats know the count
+    exactly, one bounded probe otherwise (capped at bound + 1), and
+    plan_stats reports an unreadable plan as None instead of raising."""
+    import pandas as pd
+
+    from etl_pack_spark.operators import guards
+
+    local = spark.createDataFrame(pd.DataFrame({"id": [1, 2, 3]}))
+    assert _jobs_launched(spark, lambda: guards.bounded_count(spark.range(10), 5)) == (10, 0)
+    assert _jobs_launched(spark, lambda: guards.bounded_count(local, 5)) == (3, 0)
+
+    path = str(tmp_path / "scan")
+    spark.range(50).write.parquet(path)
+    scan = spark.read.parquet(path)
+    got, jobs = _jobs_launched(spark, lambda: guards.bounded_count(scan, 9))
+    assert got == 10 and jobs >= 1
+    assert guards.bounded_count(scan, 100) == 50
+
+    class _Unreadable:
+        def __getattr__(self, name):
+            raise RuntimeError("plan unavailable")
+
+    assert guards.plan_stats(_Unreadable()) is None
+    # unreadable stats fall back to the probe, even on an exact leaf
+    monkeypatch.setattr(guards, "plan_stats", lambda df: None)
+    got, jobs = _jobs_launched(spark, lambda: guards.bounded_count(spark.range(10), 5))
+    assert got == 6 and jobs >= 1
 
 
 def test_ppl_bucket_split_oracle_parity(spark, sf_dir):

@@ -8,17 +8,19 @@ the box: A B B A A B B A, one process per leg, each leg timing the
 probe queries once, cold cache, noop sink. A box regression is UNIFORM
 across queries; a code regression is query-shaped.
 
-    python tools/abba.py BASE_TREE [sf_dir] [n_legs_per_arm] [out.json]
+    python tools/abba.py BASE_TREE [sf_dir] [n_legs_per_arm] [out.json] [q1,q2,...]
 
 BASE_TREE is a checkout of the comparison commit (e.g. a git worktree
 of the previous round's end state). Writes every raw leg sample to
 ``out.json`` (default tools/abba_latest.json).
 
-Probe set (round-13 VERDICT #8): the four standing probes PLUS
-``tpch_q5_like`` and ``sessionize`` — both swung ~2x between same-tree
-legs of the r13 driver record and needed manual first-attempt
-archaeology to clear; carrying them here keeps future attribution one
-artifact away.
+The last argument is a comma-separated list of registry or retired
+query names to probe (a round's changed rows, say); it defaults to the
+standing probe set ``QUERIES`` (round-13 VERDICT #8): the four standing
+probes PLUS ``tpch_q5_like`` and ``sessionize`` — both swung ~2x
+between same-tree legs of the r13 driver record and needed manual
+first-attempt archaeology to clear; carrying them here keeps future
+attribution one artifact away.
 """
 
 from __future__ import annotations
@@ -79,17 +81,18 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     out_name = sys.argv[4] if len(sys.argv) > 4 else "abba_latest.json"
+    queries = sys.argv[5].split(",") if len(sys.argv) > 5 else QUERIES
     a_tree = str(Path(__file__).resolve().parent.parent)  # this HEAD
     legs: list[dict] = []
     # A B B A repeated: adjacent pairs see the same ambient window twice
     order = ("A" + "BBAA" * n)[: 2 * n]
     for i, arm in enumerate(order):
         tree = a_tree if arm == "A" else b_tree
-        res = run_leg(tree, sf_dir, QUERIES)
+        res = run_leg(tree, sf_dir, queries)
         legs.append({"i": i, "arm": arm, **res})
         print(json.dumps(legs[-1]))
     summary = {}
-    for q in QUERIES:
+    for q in queries:
         a = [r[q] for r in legs if r["arm"] == "A" and r.get(q) is not None]
         b = [r[q] for r in legs if r["arm"] == "B" and r.get(q) is not None]
         summary[q] = {
@@ -100,7 +103,7 @@ def main() -> None:
             ),
         }
     out = {"order": order, "sf_dir": sf_dir, "a_tree": a_tree,
-           "b_tree": b_tree, "queries": QUERIES, "legs": legs,
+           "b_tree": b_tree, "queries": queries, "legs": legs,
            "summary": summary}
     Path(__file__).with_name(out_name).write_text(
         json.dumps(out, indent=1) + "\n")
